@@ -20,6 +20,7 @@ the target).
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
 from functools import reduce
 
@@ -29,6 +30,7 @@ from pyspark.sql.window import Window
 
 _PREC = "__prec"
 _RN = "__rn"
+_FILE = "__file"
 
 
 def latest_wins(
@@ -71,6 +73,109 @@ def merge_upsert(
     return deduped.drop(_PREC)
 
 
+def merge_into_parquet(
+    spark,
+    path: str,
+    source: DataFrame,
+    keys: Sequence[str],
+    version_col: str,
+    partition_by: Sequence[str] = (),
+) -> None:
+    """Copy-on-write ``MERGE INTO`` of ``source`` into the parquet table at
+    ``path`` under the strictly-newer guard (``merge_upsert``).
+
+    A partitioned table is rewritten only in the partitions the merge
+    touches — those the source writes into plus those that hold a source
+    key now — in one write with dynamic partition overwrite, so every
+    other partition's files stay byte-identical on disk. This is the
+    parquet-native stand-in for a transactional MERGE (Delta/Iceberg are
+    not dependencies, see README): dynamic overwrite plays the role of
+    MERGE's file-level skipping, so a refresh touching one day of a
+    year-partitioned table rewrites 1/365th of it (the reference's
+    row-level ``ON CONFLICT`` upsert, its queries.py:151-160, is
+    incremental the same way). Without a transaction log the
+    swap is atomic per partition directory rather than global —
+    acceptable for idempotent strictly-newer merges, which converge on
+    rerun after any partial failure.
+
+    A key may change partitions (its newer row carries another partition
+    value): the partition it leaves is rewritten without it, and one it
+    leaves empty is deleted. NULL partition values are matched null-safe.
+
+    An unpartitioned table cannot be overwritten while it is read, so it
+    is merged into ``<path>__staging``, which then replaces ``path`` by
+    rename — still one write.
+
+    The source schema is the table's contract: the table is read with it
+    (partition-directory type inference would re-type a string partition
+    value '01' as int 1 and land the merged rows in a new ``d=1``
+    directory beside the stale ``d=01``), so a column the source lacks is
+    dropped from the rewritten files.
+
+    Scale: one collect gathers one row per touched partition from a
+    key-and-partition-column scan of the table semi-joined to the
+    broadcast source keys; the merge reads only the touched partitions
+    (PartitionFilters) and shuffles their rows plus the source, which
+    is computed once.
+    """
+    keys, partition_by = list(keys), list(partition_by)
+    # The source is read three times (keys, partition values, merge).
+    # Lazy: the first job stores it and the later ones read that copy,
+    # so they agree on its rows even for a nondeterministic or costly
+    # feed — a merge row landing in a partition the pruned read skipped
+    # would replace that partition's rows — at no job of its own.
+    source = source.localCheckpoint(eager=False)
+    target = spark.read.schema(source.schema).parquet(path)
+    if not partition_by:
+        staging = path.rstrip("/") + "__staging"
+        merge_upsert(target, source, keys, version_col).write.mode(
+            "overwrite"
+        ).parquet(staging)
+        _replace_dir(spark, staging, path)
+        return
+    # Per touched partition, one file that holds a source key there now
+    # (NULL where the partition only receives source rows).
+    holders = (
+        target.select(
+            *partition_by, *keys, F.col("_metadata.file_path").alias(_FILE)
+        )
+        .join(F.broadcast(source.select(*keys)), keys, "left_semi")
+        .drop(*keys)
+    )
+    written = source.select(
+        *partition_by, F.lit(None).cast("string").alias(_FILE)
+    )
+    touched = (
+        holders.unionByName(written)
+        .groupBy(*partition_by)
+        .agg(F.min(_FILE).alias(_FILE))
+        .collect()
+    )
+    if not touched:
+        return
+    pruned = target.filter(
+        _in_partitions(partition_by, [r[:-1] for r in touched])
+    )
+    merged = merge_upsert(pruned, source, keys, version_col)
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    old_mode = spark.conf.get(mode)
+    spark.conf.set(mode, "dynamic")
+    try:
+        merged.write.mode("overwrite").partitionBy(*partition_by).parquet(
+            path
+        )
+    finally:
+        spark.conf.set(mode, old_mode)
+    # Dynamic overwrite replaces the directory of every partition that
+    # received rows and leaves one that received none as it was. A
+    # touched partition that still holds its pre-write file therefore
+    # lost all its rows to other partitions: delete it.
+    for uri in {r[_FILE] for r in touched if r[_FILE] is not None}:
+        f, fs = _hadoop_path(spark, spark._jvm.java.net.URI(uri))
+        if fs.exists(f):
+            fs.delete(f.getParent(), True)
+
+
 def merge_upsert_partitioned(
     spark,
     target_path: str,
@@ -79,67 +184,56 @@ def merge_upsert_partitioned(
     version_col: str,
     partition_col: str,
 ) -> None:
-    """Incremental MERGE into a partitioned parquet fact table: only the
-    partitions containing source rows are read, merged, and rewritten —
-    untouched partition files are left byte-identical on disk.
+    """``merge_into_parquet`` for a fact table partitioned on one column
+    that is never NULL (an event's date): only the touched partitions
+    are read, merged and rewritten.
 
-    This is the parquet-native approximation of a transactional
-    ``MERGE INTO`` (Delta/Iceberg — not installable in this sandbox, see
-    README): dynamic partition overwrite plays the role of MERGE's
-    file-level skipping, so a refresh touching one day of a year-
-    partitioned table rewrites 1/365th of it instead of the whole table
-    (the reference's row-level ``ON CONFLICT`` upsert is incremental the
-    same way, /root/reference/queries.py:151-160). Without a transaction
-    log the swap is per-partition-directory atomic rather than global —
-    acceptable for idempotent strictly-newer merges, which converge on
-    rerun after any partial failure.
-
-    Requires ``partition_col`` to be functionally determined by the
-    merge key (an event's date never changes) — the invariant that makes
-    "partitions containing source keys" = "partitions needing rewrite".
-
-    Scale: the target read prunes to the touched partitions at the scan
-    (PartitionFilters), the merge shuffles only those rows + the source,
-    and the collect() gathers one value per touched partition, not rows.
+    A NULL partition value in ``source`` means a broken feed here, not a
+    row to file under the default partition directory, so it is refused.
     """
-    # Materialize the source once: it is executed both for the partition
-    # collect and inside the merge write — for an expensive incremental
-    # feed the dominant cost would otherwise double (Spark replans each
-    # DataFrame reference).
-    source = source.localCheckpoint(eager=True)
-    parts = [
-        r[0] for r in source.select(partition_col).distinct().collect()
-    ]
-    if None in parts:
-        # A NULL partition value cannot be matched by the pruning filter
-        # (NULL never equals anything), but dynamic overwrite would still
-        # replace the default-partition directory — silently dropping its
-        # existing rows. Refuse instead of corrupting.
+    if not source.filter(F.col(partition_col).isNull()).isEmpty():
         raise ValueError(
             f"source has NULL values in partition column "
             f"'{partition_col}' — fill or filter them before merging"
         )
-    if not parts:
-        return
-    # Explicit schema: partition-directory type INFERENCE would re-type
-    # e.g. a string partition value '01' as int 1, landing the merged
-    # rows in a differently-named directory (d=1) while the stale d=01
-    # directory survives — duplicate keys after merge. The source schema
-    # is the contract for both data and partition column types.
-    target = spark.read.schema(source.schema).parquet(target_path).filter(
-        F.col(partition_col).isin(parts)
+    merge_into_parquet(
+        spark, target_path, source, keys, version_col, [partition_col]
     )
-    merged = merge_upsert(target, source, keys, version_col)
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+
+
+def _in_partitions(cols: list[str], values: list[tuple]) -> Column:
+    """True for rows whose partition tuple is one of ``values``, NULLs
+    included (plain ``=`` / IN never match NULL)."""
+    if len(cols) == 1:
+        col, vals = F.col(cols[0]), [v[0] for v in values]
+        hit = col.isin([v for v in vals if v is not None])
+        return hit | col.isNull() if None in vals else hit
+    return reduce(
+        operator.or_,
+        [
+            reduce(
+                operator.and_,
+                [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(cols, row)],
+            )
+            for row in values
+        ],
+    )
+
+
+def _hadoop_path(spark, path):
+    """(Hadoop ``Path``, its ``FileSystem``) for a path string or a
+    ``java.net.URI`` (Spark reports file paths as percent-encoded URIs)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def _replace_dir(spark, src: str, dst: str) -> None:
+    """Move directory ``src`` onto ``dst``, replacing it."""
+    s, fs = _hadoop_path(spark, src)
+    d, _ = _hadoop_path(spark, dst)
+    fs.delete(d, True)
+    if not fs.rename(s, d):
+        raise OSError(f"could not move {src} to {dst}")
 
 
 def snapshot_diff(

@@ -224,15 +224,18 @@ _FIXED_WIDTH_BYTES = {
 
 
 def _parse_byte_size(raw) -> int | None:
-    """Byte count for a Spark size-conf value: plain bytes or a
-    k/m/g/t(b) binary-unit suffix; None when unparseable."""
+    """Byte count for a Spark size-conf value: plain bytes, a bare ``b``
+    suffix, or a k/m/g/t/p(b) binary-unit suffix; None when
+    unparseable."""
     s = str(raw).strip().lower()
+    s = s[:-1] if s.endswith("b") and len(s) > 1 else s
     try:
         return int(s)
     except ValueError:
         pass
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-    s = s[:-1] if s.endswith("b") and len(s) > 1 else s
+    units = {
+        "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "p": 1024**5,
+    }
     if s and s[-1] in units:
         try:
             return int(float(s[:-1]) * units[s[-1]])

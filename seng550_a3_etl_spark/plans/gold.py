@@ -8,9 +8,10 @@ Reference physical design → Spark equivalent:
   pruning + min/max file skipping replace the B-tree).
 - materialized view of the 3-way join (/root/reference/etl.py:251-288) →
   a persisted gold DataFrame written with ``save_gold``.
-- denormalized fact table + incremental upsert
-  (/root/reference/queries.py:94-161, etl.py:290-327) → ``build_facts``
-  + ``merge_upsert`` + overwrite (Delta MERGE would make this
+- denormalized fact table + incremental upsert (the reference's
+  queries.py:94-161, etl.py:290-327) → ``build_facts`` +
+  ``refresh_gold_incremental``: a copy-on-write MERGE that rewrites only
+  the touched partitions, once (Delta MERGE would make this
   transactional; the parquet path is idempotent via the strictly-newer
   guard).
 
@@ -27,7 +28,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from seng550_a3_etl_spark.operators.dedup import latest_wins, merge_upsert
+from seng550_a3_etl_spark.operators.dedup import (
+    latest_wins,
+    merge_into_parquet,
+)
 from seng550_a3_etl_spark.operators.spatial import points_in_polygons_join
 
 
@@ -86,18 +90,16 @@ def refresh_gold_incremental(
     version_col: str,
     partition_by: Sequence[str] = (),
 ) -> DataFrame:
-    """Incremental fact refresh (/root/reference/etl.py:317-327): merge a
+    """Incremental fact refresh (the reference's etl.py:317-327): merge a
     new batch into the persisted gold table under the strictly-newer
-    guard, rewrite, return the refreshed frame. Parquet requires the
-    rewrite staging through a temp path (no transactional MERGE);
-    with Delta this becomes a single MERGE INTO."""
-    current = spark.read.parquet(path)
-    merged = merge_upsert(current, new_batch, keys, version_col)
-    staging = path.rstrip("/") + "__staging"
-    save_gold(merged, staging, partition_by)
-    refreshed = spark.read.parquet(staging)
-    save_gold(refreshed, path, partition_by)
-    return spark.read.parquet(path)
+    guard and return the refreshed table, lazily.
+
+    One partition-scoped copy-on-write write (``merge_into_parquet``):
+    only partitions the batch writes into or takes a key out of are
+    rewritten; the rest keep their files. The batch schema is the
+    table's schema — the table is read with it, never inferred."""
+    merge_into_parquet(spark, path, new_batch, keys, version_col, partition_by)
+    return spark.read.schema(new_batch.schema).parquet(path)
 
 
 def dedup_incidents(

@@ -14,7 +14,8 @@
   idempotence (re-processing a batch cannot regress a newer row).
 
 Scale: state store usage is bounded by the watermark; the merge itself
-is the batch merge_upsert — one shuffle per batch on the key.
+is the batch ``merge_into_parquet`` — one shuffle per batch on the key
+and one write.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from seng550_a3_etl_spark.operators.dedup import merge_upsert
+from seng550_a3_etl_spark.operators.dedup import merge_into_parquet
 
 
 def windowed_event_counts(
@@ -183,11 +184,7 @@ def streaming_fact_upsert(
     )
 
     def _merge(batch: DataFrame, _batch_id: int) -> None:
-        current = spark.read.parquet(target_path)
-        merged = merge_upsert(current, batch, keys, version_col)
-        staging = target_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(target_path)
+        merge_into_parquet(spark, target_path, batch, keys, version_col)
 
     writer = (
         stream.writeStream.foreachBatch(_merge)

@@ -45,7 +45,9 @@ def nation_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact tables (which would force the big tables through the join before
     any reduction), pre-aggregate each fact to per-nation partials — the
     shuffle then carries ≤25 rows per fact — and LEFT-join the aggregates
-    onto the broadcast-sized dimension, coalescing absent groups to 0.
+    onto the dimension, coalescing absent groups to 0. The broadcast hint
+    goes on the ≤25-row aggregates: a LEFT join can only build its right
+    side, so a hint on the preserved nation side would be dropped.
     """
     t = load_tables(spark, sf_dir)
     cust = t.customer.select("c_custkey", "c_nationkey")
@@ -59,15 +61,15 @@ def nation_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("o_orderkey").alias("order_count"))
     )
     return (
-        F.broadcast(t.nation.select("n_nationkey", "n_name"))
+        t.nation.select("n_nationkey", "n_name")
         .join(
-            cust_per_nation,
+            F.broadcast(cust_per_nation),
             F.col("n_nationkey") == cust_per_nation.c_nationkey,
             "left",
         )
         .drop("c_nationkey")
         .join(
-            orders_per_nation,
+            F.broadcast(orders_per_nation),
             F.col("n_nationkey") == orders_per_nation.c_nationkey,
             "left",
         )

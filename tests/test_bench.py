@@ -73,6 +73,26 @@ def test_compact_line_carries_cache_build_1x_seconds():
     }
 
 
+def test_compact_line_skips_cache_without_build_walls():
+    # A cache whose spot run recorded no (or only the 1x) build wall has
+    # no 1x figure (or no ratio); it must not fail the whole line.
+    spot = dict(SPOT, cache_builds={
+        "shingle_sets_hashed": {"build_s": [], "verdict": "failed"},
+        "minhash_signatures": {"build_s": [1.5], "verdict": "failed"},
+        "copurchase_gold": {"build_s": [0.8, 2.4, 3.0], "verdict": "ok"},
+    })
+    d = json.loads(
+        bench._compact_line(100.0, SUITE_TIMINGS, 0.1, {}, IDLE, spot)
+    )
+    assert d["cache_builds_1x"] == {
+        "minhash_signatures": 1.5, "copurchase_gold": 0.8,
+    }
+    assert d["sf1_spot"]["cache_builds"] == {
+        "shingle_sets_hashed": None, "minhash_signatures": None,
+        "copurchase_gold": 3.0,
+    }
+
+
 def test_compact_line_stubs_decorative_blocks_before_queries():
     # VERDICT r15 #1 core regression: with a fat retimed block and fat
     # spot diagnostics, the line must stub THOSE and keep >= the floor

@@ -164,6 +164,35 @@ def test_merge_upsert_partitioned_idempotent(spark, tmp_path):
     assert [(r[0], r[3]) for r in once] == [(1, "s1"), (2, "t2")]
 
 
+def test_merge_upsert_partitioned_moved_key(spark, tmp_path):
+    """A key whose newer row lands in another partition must not survive
+    in its old one, and a partition it leaves empty is deleted —
+    dynamic overwrite by itself never touches a partition that receives
+    no rows."""
+    import os
+
+    from seng550_a3_etl_spark.operators.dedup import merge_upsert_partitioned
+
+    path = str(tmp_path / "fact_move")
+    schema = "k int, d string, ts timestamp, v string"
+    spark.createDataFrame(
+        [
+            (1, "2024-01-01", _ts("2024-01-01T10:00:00"), "t1"),
+            (2, "2024-01-02", _ts("2024-01-02T10:00:00"), "t2"),
+        ],
+        schema,
+    ).write.partitionBy("d").parquet(path)
+    source = spark.createDataFrame(
+        [(2, "2024-01-01", _ts("2024-01-02T11:00:00"), "s2")], schema
+    )
+    merge_upsert_partitioned(spark, path, source, ["k"], "ts", "d")
+    rows = spark.read.schema(schema).parquet(path).collect()
+    assert sorted((r.k, r.d, r.v) for r in rows) == [
+        (1, "2024-01-01", "t1"), (2, "2024-01-01", "s2")
+    ]
+    assert not os.path.exists(f"{path}/d=2024-01-02")
+
+
 def test_merge_upsert_partitioned_rejects_null_partition(spark, tmp_path):
     import pytest
 

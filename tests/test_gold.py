@@ -5,6 +5,7 @@ strictly-newer guard, and W3 create-if-absent idempotence."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -73,6 +74,208 @@ def test_refresh_gold_incremental(spark, tmp_path):
         spark, path, batch, keys=["k"], version_col="ts", partition_by=["d"]
     )
     assert {r.k: r.v for r in again.collect()} == got
+
+
+def _parquet_files(root):
+    """{partition directory: sorted (file, mtime_ns, size)} under ``root``."""
+    out = {}
+    for dirpath, _, names in os.walk(root):
+        stats = sorted(
+            (n, st.st_mtime_ns, st.st_size)
+            for n in names
+            if n.endswith(".parquet")
+            for st in [os.stat(os.path.join(dirpath, n))]
+        )
+        if stats:
+            out[os.path.relpath(dirpath, root)] = stats
+    return out
+
+
+_FACTS = "k int, ts timestamp, v string, d string"
+
+
+def test_refresh_gold_moves_key_between_partitions(spark, tmp_path):
+    """A key whose newer row carries another partition value leaves no
+    stale copy behind; a partition it empties is deleted (dynamic
+    overwrite alone would keep it); partitions holding no batch key keep
+    their files byte-identical; nothing is staged beside the table; a
+    rerun changes nothing."""
+    path = str(tmp_path / "facts")
+    odd = "2024-01-02 a/b%"  # escaped in its directory name
+    save_gold(
+        spark.createDataFrame(
+            [
+                (1, _ts("2024-01-01T10:00:00"), "t1", "2024-01-01"),
+                (2, _ts("2024-01-02T10:00:00"), "t2", odd),
+                (3, _ts("2024-01-03T10:00:00"), "t3", "2024-01-03"),
+            ],
+            _FACTS,
+        ),
+        path,
+        partition_by=["d"],
+    )
+    before = _parquet_files(path)
+    batch = spark.createDataFrame(
+        [
+            # fresher and moved: leaves the odd partition empty
+            (2, _ts("2024-01-02T11:00:00"), "s2", "2024-01-01"),
+            # staler and moved: ignored, so 2024-01-09 never appears
+            (1, _ts("2024-01-01T09:00:00"), "s1", "2024-01-09"),
+        ],
+        _FACTS,
+    )
+
+    def refresh():
+        out = refresh_gold_incremental(
+            spark, path, batch, keys=["k"], version_col="ts",
+            partition_by=["d"],
+        )
+        return sorted((r.k, r.v, r.d) for r in out.collect())
+
+    want = [(1, "t1", "2024-01-01"), (2, "s2", "2024-01-01"),
+            (3, "t3", "2024-01-03")]
+    assert refresh() == want
+    after = _parquet_files(path)
+    assert sorted(after) == ["d=2024-01-01", "d=2024-01-03"]
+    assert after["d=2024-01-03"] == before["d=2024-01-03"]
+    assert os.listdir(tmp_path) == ["facts"]
+    # no emptied partition directory is left either
+    assert sorted(n for n in os.listdir(path) if n.startswith("d=")) == [
+        "d=2024-01-01", "d=2024-01-03"
+    ]
+
+    assert refresh() == want
+    assert sorted(_parquet_files(path)) == ["d=2024-01-01", "d=2024-01-03"]
+
+
+def test_refresh_gold_null_partition_values(spark, tmp_path):
+    """NULL partition values (the default-partition directory) are
+    matched null-safe: merged into, and emptied like any other."""
+    path = str(tmp_path / "facts")
+    save_gold(
+        spark.createDataFrame(
+            [
+                (1, _ts("2024-01-01T10:00:00"), "t1", None),
+                (2, _ts("2024-01-01T10:00:00"), "t2", "2024-01-01"),
+                (4, _ts("2024-01-01T10:00:00"), "t4", None),
+            ],
+            _FACTS,
+        ),
+        path,
+        partition_by=["d"],
+    )
+
+    def refresh(rows):
+        out = refresh_gold_incremental(
+            spark, path, spark.createDataFrame(rows, _FACTS), keys=["k"],
+            version_col="ts", partition_by=["d"],
+        )
+        return sorted((r.k, r.v, r.d) for r in out.collect())
+
+    assert refresh([
+        (1, _ts("2024-01-01T11:00:00"), "s1", None),
+        (3, _ts("2024-01-01T11:00:00"), "s3", None),
+    ]) == [(1, "s1", None), (2, "t2", "2024-01-01"), (3, "s3", None),
+           (4, "t4", None)]
+    assert refresh([
+        (k, _ts("2024-01-01T12:00:00"), f"u{k}", "2024-01-02")
+        for k in (1, 3, 4)
+    ]) == [(1, "u1", "2024-01-02"), (2, "t2", "2024-01-01"),
+           (3, "u3", "2024-01-02"), (4, "u4", "2024-01-02")]
+    assert sorted(_parquet_files(path)) == ["d=2024-01-01", "d=2024-01-02"]
+
+
+def test_refresh_gold_nondeterministic_batch(spark, tmp_path):
+    """The batch is read more than once (touched partitions, then the
+    merge); every read must see the same rows. A batch whose partition
+    value is drawn at random would otherwise land rows in a partition
+    the merge never read, replacing that partition's existing rows."""
+    import random
+
+    path = str(tmp_path / "facts")
+    save_gold(
+        spark.createDataFrame(
+            [(k, _ts("2024-01-01T10:00:00"), "t", "a" if k < 10 else "b")
+             for k in range(20)],
+            _FACTS,
+        ),
+        path,
+        partition_by=["d"],
+    )
+    pick = F.udf(lambda _: random.choice("ab"), "string")
+    for i in range(6):
+        batch = spark.range(1).select(
+            F.lit(100 + i).cast("int").alias("k"),
+            F.lit(_ts("2024-01-02T10:00:00")).alias("ts"),
+            F.lit("s").alias("v"),
+            pick("id").alias("d"),
+        )
+        out = refresh_gold_incremental(
+            spark, path, batch, keys=["k"], version_col="ts",
+            partition_by=["d"],
+        )
+        assert sorted(r.k for r in out.collect()) == (
+            list(range(20)) + list(range(100, 101 + i))
+        )
+
+
+def test_refresh_gold_multi_column_partitions(spark, tmp_path):
+    schema = "k int, ts timestamp, v string, y int, m string"
+    path = str(tmp_path / "facts")
+    save_gold(
+        spark.createDataFrame(
+            [
+                (1, _ts("2024-01-01T10:00:00"), "t1", 2024, "01"),
+                (2, _ts("2024-01-01T10:00:00"), "t2", 2024, None),
+                (3, _ts("2024-01-01T10:00:00"), "t3", 2023, "01"),
+            ],
+            schema,
+        ),
+        path,
+        partition_by=["y", "m"],
+    )
+    before = _parquet_files(path)
+    batch = spark.createDataFrame(
+        [(2, _ts("2024-01-01T11:00:00"), "s2", 2024, "01")], schema
+    )
+    out = refresh_gold_incremental(
+        spark, path, batch, keys=["k"], version_col="ts",
+        partition_by=["y", "m"],
+    )
+    assert sorted((r.k, r.v, r.y, r.m) for r in out.collect()) == [
+        (1, "t1", 2024, "01"), (2, "s2", 2024, "01"), (3, "t3", 2023, "01")
+    ]
+    after = _parquet_files(path)
+    assert sorted(after) == ["y=2023/m=01", "y=2024/m=01"]
+    assert after["y=2023/m=01"] == before["y=2023/m=01"]
+
+
+def test_refresh_gold_unpartitioned(spark, tmp_path):
+    """An unpartitioned table cannot be overwritten while it is read: the
+    merge is staged and moved into place, leaving no staging directory."""
+    path = str(tmp_path / "facts")
+    schema = "k int, ts timestamp, v string"
+    save_gold(
+        spark.createDataFrame(
+            [(1, _ts("2024-01-01T10:00:00"), "t1"),
+             (2, _ts("2024-01-01T10:00:00"), "t2")],
+            schema,
+        ),
+        path,
+    )
+    batch = spark.createDataFrame(
+        [(1, _ts("2024-01-01T11:00:00"), "s1"),
+         (3, _ts("2024-01-01T11:00:00"), "s3")],
+        schema,
+    )
+    for _ in range(2):  # idempotent
+        out = refresh_gold_incremental(
+            spark, path, batch, keys=["k"], version_col="ts"
+        )
+        assert sorted((r.k, r.v) for r in out.collect()) == [
+            (1, "s1"), (2, "t2"), (3, "s3")
+        ]
+        assert os.listdir(tmp_path) == ["facts"]
 
 
 def test_catalog_ddl_idempotent(spark, tmp_path):

@@ -1145,6 +1145,17 @@ def test_label_prop_step_label_rows_hint_skips_count(spark, monkeypatch):
     assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
 
 
+def test_parse_byte_size_bare_b_and_p_suffixes():
+    from seng550_a3_etl_spark.operators.graph import _parse_byte_size
+
+    for raw, want in [
+        ("100", 100), ("100b", 100), ("1k", 1024), ("1kb", 1024),
+        ("10m", 10 * 1024**2), ("2g", 2 * 1024**3), ("1p", 1024**5),
+        ("1pb", 1024**5), ("garbage", None), ("1x", None), ("kb", None),
+    ]:
+        assert _parse_byte_size(raw) == want, raw
+
+
 def test_broadcast_threshold_parses_unit_suffixes(spark):
     """ADVICE r15 (low): k/m/g byte-unit suffixed threshold values must
     parse to their real byte counts instead of clamping to 10 MiB."""

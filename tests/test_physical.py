@@ -104,6 +104,46 @@ def test_small_dims_broadcast(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+@contextmanager
+def _captured_log(spark, logger_name: str):
+    """What the JVM logger ``logger_name`` logs at WARN or above in the
+    block, whatever level the session's log4j profile sets."""
+    jvm = spark._jvm
+    log4j = jvm.org.apache.logging.log4j
+    logger = log4j.LogManager.getContext(False).getLogger(logger_name)
+    writer = jvm.java.io.StringWriter()
+    appender = log4j.core.appender.WriterAppender.createAppender(
+        log4j.core.layout.PatternLayout.createDefaultLayout(),
+        None, writer, "test-capture", False, True,
+    )
+    appender.start()
+    level = logger.getLevel()
+    logger.addAppender(appender)
+    logger.setLevel(log4j.Level.WARN)
+    try:
+        yield writer
+    finally:
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+
+
+def test_nation_order_counts_broadcast_hint_is_honoured(spark):
+    # A LEFT join can only build its right side: both joins must build
+    # the hinted ≤25-row aggregates, and no hint may be dropped (Spark
+    # logs each dropped hint through HintErrorLogger).
+    with _captured_log(
+        spark, "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    ) as log:
+        plan = _executed_plan(QUERIES["nation_order_counts"](spark, SF_ORACLE))
+    joins = [ln for ln in plan.splitlines() if "LeftOuter" in ln]
+    assert len(joins) == 2, plan
+    assert all(
+        "BroadcastHashJoin" in ln and "BuildRight" in ln for ln in joins
+    ), plan
+    assert log.toString() == ""
+
+
 def test_whole_stage_codegen_present(spark):
     # AQE finalizes the plan only after execution, and codegen stages
     # surface as '*'-prefixed operators in the formatted explain.
