@@ -109,8 +109,10 @@ def merge_into_parquet(
     The source schema is the table's contract: the table is read with it
     (partition-directory type inference would re-type a string partition
     value '01' as int 1 and land the merged rows in a new ``d=1``
-    directory beside the stale ``d=01``), so a column the source lacks is
-    dropped from the rewritten files.
+    directory beside the stale ``d=01``). Before anything is written, the
+    source's data columns are checked against one table file's footer,
+    and the partition directories of the files the merge replaces
+    against ``partition_by``; a mismatch raises ``ValueError``.
 
     Scale: one collect gathers one row per touched partition from a
     key-and-partition-column scan of the table semi-joined to the
@@ -118,13 +120,24 @@ def merge_into_parquet(
     (PartitionFilters) and shuffles their rows plus the source, which
     is computed once.
     """
-    keys, partition_by = list(keys), list(partition_by)
     # The source is read three times (keys, partition values, merge).
     # Lazy: the first job stores it and the later ones read that copy,
     # so they agree on its rows even for a nondeterministic or costly
     # feed — a merge row landing in a partition the pruned read skipped
     # would replace that partition's rows — at no job of its own.
-    source = source.localCheckpoint(eager=False)
+    _merge_stored(
+        spark, path, source.localCheckpoint(eager=False), keys,
+        version_col, partition_by,
+    )
+
+
+def _merge_stored(spark, path, source, keys, version_col, partition_by):
+    """``merge_into_parquet`` of a ``source`` that is already stored, so
+    that every read of it sees the same rows."""
+    keys, partition_by = list(keys), list(partition_by)
+    root, fs = _hadoop_path(spark, path)
+    root = fs.makeQualified(root)
+    _check_columns(spark, fs, root, source, partition_by)
     target = spark.read.schema(source.schema).parquet(path)
     if not partition_by:
         staging = path.rstrip("/") + "__staging"
@@ -153,6 +166,13 @@ def merge_into_parquet(
     )
     if not touched:
         return
+    jvm = spark._jvm
+    held = [
+        jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(r[_FILE]))
+        for r in touched
+        if r[_FILE] is not None
+    ]
+    dirs = [_partition_dir(root, f, partition_by) for f in held]
     pruned = target.filter(
         _in_partitions(partition_by, [r[:-1] for r in touched])
     )
@@ -170,10 +190,9 @@ def merge_into_parquet(
     # received rows and leaves one that received none as it was. A
     # touched partition that still holds its pre-write file therefore
     # lost all its rows to other partitions: delete it.
-    for uri in {r[_FILE] for r in touched if r[_FILE] is not None}:
-        f, fs = _hadoop_path(spark, spark._jvm.java.net.URI(uri))
+    for f, d in zip(held, dirs):
         if fs.exists(f):
-            fs.delete(f.getParent(), True)
+            fs.delete(d, True)
 
 
 def merge_upsert_partitioned(
@@ -191,12 +210,15 @@ def merge_upsert_partitioned(
     A NULL partition value in ``source`` means a broken feed here, not a
     row to file under the default partition directory, so it is refused.
     """
+    # Stored before the check, so the check and the merge read one copy
+    # of the source's rows and an expensive feed runs once.
+    source = source.localCheckpoint(eager=False)
     if not source.filter(F.col(partition_col).isNull()).isEmpty():
         raise ValueError(
             f"source has NULL values in partition column "
             f"'{partition_col}' — fill or filter them before merging"
         )
-    merge_into_parquet(
+    _merge_stored(
         spark, target_path, source, keys, version_col, [partition_col]
     )
 
@@ -204,10 +226,6 @@ def merge_upsert_partitioned(
 def _in_partitions(cols: list[str], values: list[tuple]) -> Column:
     """True for rows whose partition tuple is one of ``values``, NULLs
     included (plain ``=`` / IN never match NULL)."""
-    if len(cols) == 1:
-        col, vals = F.col(cols[0]), [v[0] for v in values]
-        hit = col.isin([v for v in vals if v is not None])
-        return hit | col.isNull() if None in vals else hit
     return reduce(
         operator.or_,
         [
@@ -217,6 +235,55 @@ def _in_partitions(cols: list[str], values: list[tuple]) -> Column:
             )
             for row in values
         ],
+    )
+
+
+def _check_columns(spark, fs, root, source, partition_by) -> None:
+    """Raise unless the data files of the table at ``root`` hold exactly
+    the columns ``source`` writes into them. The columns come from the
+    footer of the first data file listed, read on the driver: no job."""
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        f = files.next().getPath()
+        rel = f.toUri().getPath()[len(root.toUri().getPath()):]
+        if not any(p[:1] in ("_", ".") for p in rel.split("/") if p):
+            break
+    else:
+        return  # no data file yet: nothing to disagree with
+    jvm = spark._jvm
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            f, spark._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        schema = reader.getFooter().getFileMetaData().getSchema()
+    finally:
+        reader.close()
+    table = sorted(t.getName() for t in schema.getFields())
+    data = sorted(c for c in source.columns if c not in partition_by)
+    if table != data:
+        raise ValueError(
+            f"{root} holds data columns {table}, but the merge would write "
+            f"{data} (partitioned by {partition_by})"
+        )
+
+
+def _partition_dir(root, file, partition_by: list[str]):
+    """The partition directory of data ``file`` of the table at ``root``:
+    one ``col=value`` level per partition column, in order, directly
+    below ``root``. Raises if ``file`` does not sit in one."""
+    d = p = file.getParent()
+    for col in reversed(partition_by):
+        if p is None or not p.getName().startswith(f"{col}="):
+            break
+        p = p.getParent()
+    else:
+        if p is not None and p.toUri().getPath() == root.toUri().getPath():
+            return d
+    raise ValueError(
+        f"{file} is not in a partition directory "
+        f"{'/'.join(c + '=…' for c in partition_by)} of {root}"
     )
 
 

@@ -97,7 +97,9 @@ def refresh_gold_incremental(
     One partition-scoped copy-on-write write (``merge_into_parquet``):
     only partitions the batch writes into or takes a key out of are
     rewritten; the rest keep their files. The batch schema is the
-    table's schema — the table is read with it, never inferred."""
+    table's schema — the table is read with it, never inferred — and a
+    batch whose data columns differ from the table's raises
+    ``ValueError`` before anything is written."""
     merge_into_parquet(spark, path, new_batch, keys, version_col, partition_by)
     return spark.read.schema(new_batch.schema).parquet(path)
 

@@ -210,6 +210,37 @@ def test_merge_upsert_partitioned_rejects_null_partition(spark, tmp_path):
         merge_upsert_partitioned(spark, path, source, ["k"], "ts", "d")
 
 
+def test_merge_upsert_partitioned_computes_source_once(spark, tmp_path):
+    """The NULL-partition check and the merge read one stored copy of the
+    source: a costly feed runs once, and the rows checked are the rows
+    merged."""
+    from seng550_a3_etl_spark.operators.dedup import merge_upsert_partitioned
+
+    path = str(tmp_path / "fact_once")
+    schema = "k int, d string, ts timestamp, v string"
+    spark.createDataFrame(
+        [(1, "2024-01-01", _ts("2024-01-01T10:00:00"), "t1")], schema
+    ).write.partitionBy("d").parquet(path)
+    calls = spark.sparkContext.accumulator(0)
+
+    def day(k):
+        calls.add(1)
+        return f"2024-01-0{k}"
+
+    source = spark.range(1, 4, numPartitions=3).select(
+        F.col("id").cast("int").alias("k"),
+        F.udf(day, "string")("id").alias("d"),
+        F.lit(_ts("2024-01-01T11:00:00")).alias("ts"),
+        F.lit("s").alias("v"),
+    )
+    merge_upsert_partitioned(spark, path, source, ["k"], "ts", "d")
+    rows = spark.read.schema(schema).parquet(path).collect()
+    assert sorted((r.k, r.d, r.v) for r in rows) == [
+        (1, "2024-01-01", "s"), (2, "2024-01-02", "s"), (3, "2024-01-03", "s")
+    ]
+    assert calls.value == 3
+
+
 def test_snapshot_diff_null_compare_columns(spark):
     """Presence must come from join-side membership, not compare-column
     nullness: a present-but-all-NULL row is 'changed' when the other

@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from seng550_a3_etl_spark.catalog import load_tables
@@ -276,6 +277,88 @@ def test_refresh_gold_unpartitioned(spark, tmp_path):
             (1, "s1"), (2, "t2"), (3, "s3")
         ]
         assert os.listdir(tmp_path) == ["facts"]
+
+
+def test_refresh_gold_layout_mismatch_raises_before_writing(spark, tmp_path):
+    """Refreshing a table stored unpartitioned with ``partition_by`` set
+    must not touch it: the merge would write ``d=...`` directories beside
+    the root files, and the emptied-partition cleanup would take the
+    table root for a partition directory."""
+    path = str(tmp_path / "facts")
+    save_gold(
+        spark.createDataFrame(
+            [(1, _ts("2024-01-01T10:00:00"), "t1", "2024-01-01"),
+             (2, _ts("2024-01-01T10:00:00"), "t2", "2024-01-01")],
+            _FACTS,
+        ),
+        path,
+    )
+    before = _parquet_files(path)
+    for k in (1, 3):  # a key the table holds, then only a new key
+        batch = spark.createDataFrame(
+            [(k, _ts("2024-01-01T11:00:00"), "s", "2024-01-02")], _FACTS
+        )
+        with pytest.raises(ValueError, match="data columns"):
+            refresh_gold_incremental(
+                spark, path, batch, keys=["k"], version_col="ts",
+                partition_by=["d"],
+            )
+        assert _parquet_files(path) == before
+        assert os.listdir(tmp_path) == ["facts"]
+
+
+@pytest.mark.parametrize("partition_by", [["d"], []])
+def test_refresh_gold_column_mismatch_raises(spark, tmp_path, partition_by):
+    """A batch that lacks a table column, or carries one the table lacks,
+    is refused before anything is written: reading the table with the
+    batch's schema would drop the first from the rewritten files only and
+    fill the second with NULL."""
+    path = str(tmp_path / "facts")
+    save_gold(
+        spark.createDataFrame(
+            [(1, _ts("2024-01-01T10:00:00"), "t1", "2024-01-01")], _FACTS
+        ),
+        path,
+        partition_by=partition_by,
+    )
+    before = _parquet_files(path)
+    row = (1, _ts("2024-01-01T11:00:00"), "2024-01-01")
+    for batch in (
+        spark.createDataFrame([row], "k int, ts timestamp, d string"),
+        spark.createDataFrame(
+            [row[:2] + ("s1", row[2], 7)], _FACTS + ", extra int"
+        ),
+    ):
+        with pytest.raises(ValueError, match="data columns"):
+            refresh_gold_incremental(
+                spark, path, batch, keys=["k"], version_col="ts",
+                partition_by=partition_by,
+            )
+        assert _parquet_files(path) == before
+
+
+def test_partition_dir_accepts_only_partition_directories(spark):
+    """The emptied-partition cleanup deletes only a directory exactly one
+    ``col=value`` level per partition column below the table root."""
+    from seng550_a3_etl_spark.operators.dedup import _partition_dir
+
+    def path(s):
+        return spark._jvm.org.apache.hadoop.fs.Path(s)
+
+    root = path("file:/t/facts")
+    ok = _partition_dir(root, path("file:/t/facts/y=1/m=2/p.parquet"),
+                        ["y", "m"])
+    assert ok.toString() == "file:/t/facts/y=1/m=2"
+    for bad, cols in [
+        ("file:/t/facts/p.parquet", ["d"]),  # a root file
+        ("file:/t/facts/y=1/p.parquet", ["y", "m"]),  # too shallow
+        ("file:/t/facts/x=0/y=1/m=2/p.parquet", ["y", "m"]),  # too deep
+        ("file:/t/facts/m=2/y=1/p.parquet", ["y", "m"]),  # wrong order
+        ("file:/t/other/d=1/p.parquet", ["d"]),  # another table
+        ("file:/d=1/p.parquet", ["d", "d"]),  # above the file system root
+    ]:
+        with pytest.raises(ValueError, match="not in a partition directory"):
+            _partition_dir(root, path(bad), cols)
 
 
 def test_catalog_ddl_idempotent(spark, tmp_path):
